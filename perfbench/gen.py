@@ -311,6 +311,8 @@ def make_tpch(seed: int, n_orders: int) -> dict[str, pa.Table]:
         }
     )
     n_ev = n_orders
+    # events.ts is INT64 TIMESTAMP(MICROS), as in the test data's footers
+    # (load_table's TIMESTAMP(NANOS) branch is not taken there either)
     ev_us = np.sort(rng.integers(0, 30 * 86_400_000_000, n_ev)) + int(
         (datetime(2024, 1, 1) - datetime(1970, 1, 1)) / timedelta(microseconds=1)
     )
@@ -346,6 +348,10 @@ def make_tpch(seed: int, n_orders: int) -> dict[str, pa.Table]:
     return t
 
 
+UPSERT_UPDATES = 40  # existing customers re-priced per batch
+UPSERT_INSERTS = 10  # new customers per batch
+
+
 @dataclass
 class UpsertStream:
     """Deterministic sequence of customer upsert batches and the
@@ -354,8 +360,6 @@ class UpsertStream:
 
     seed: int
     base: pd.DataFrame
-    per_batch_updates: int = 40
-    per_batch_inserts: int = 10
     state: pd.DataFrame = field(init=False)
     applied: int = field(init=False, default=0)
 
@@ -365,8 +369,8 @@ class UpsertStream:
     def batch(self, i: int) -> pd.DataFrame:
         rng = np.random.default_rng([self.seed, 7919, i])
         n0 = len(self.base)
-        upd_ids = rng.choice(n0, self.per_batch_updates, replace=False)
-        ins_ids = n0 + i * self.per_batch_inserts + np.arange(self.per_batch_inserts)
+        upd_ids = rng.choice(n0, UPSERT_UPDATES, replace=False)
+        ins_ids = n0 + i * UPSERT_INSERTS + np.arange(UPSERT_INSERTS)
         return customer_frame(np.concatenate([upd_ids, ins_ids]), rng)
 
     def apply(self, batch: pd.DataFrame) -> pd.DataFrame:

@@ -30,6 +30,10 @@ sys.path.insert(0, HERE)
 from workloads import SQL_READS, WORKLOADS, MlFit, Runner  # noqa: E402
 
 SETUP_REPS = 3
+# the one failure that does not make a run incorrect: load_table's
+# memoized plan keeps a stale file listing after merge_into_path swaps
+# the directory. It still counts in ``failed``.
+KNOWN_DEFECT = ("tables.load_table.read_back", "FAILED_READ_FILE.FILE_NOT_EXIST")
 DRIVER_MEM = "2g"  # get_spark defaults to 16g, more than a 15 GiB host has
 
 END_TO_END = {
@@ -154,12 +158,12 @@ def run(args, work: str, held: dict) -> dict:
             setup_times.append(time.perf_counter() - t0)
             if rep < SETUP_REPS - 1:
                 shutil.rmtree(data)
+        wl.prepare_checks(spark)  # untimed, and before the warm-up so it is checked too
         t0 = time.perf_counter()
         warm = Runner(tracer)
         for _ in range(wl.WARM_UP_PASSES):
             wl.run_pass(warm)
         warmup_s = time.perf_counter() - t0
-        wl.prepare_checks(spark)
 
         tracer.phase = "timed"
         runner = Runner(tracer)
@@ -289,6 +293,11 @@ def report(res, metrics: dict[str, float], trace: bool) -> None:
         print(f"# failed x{n}: {e}")
 
 
+def _known_defect(o) -> bool:
+    name, error_class = KNOWN_DEFECT
+    return o.name == name and error_class in (o.error or "")
+
+
 def shutdown(spark) -> None:
     """Stop Spark, the JVM and its Python workers, and wait for them."""
     from spans import descendants
@@ -361,9 +370,8 @@ def main() -> int:
     report(res, metrics, bool(args.trace))
     ops = res["runner"].ops
     failed = sum(1 for o in ops if not o.ok)
-    checks_failed = sum(1 for o in ops if not o.ok and (o.error or "").startswith("check:"))
     print(json.dumps({
-        "correct": checks_failed == 0,
+        "correct": all(o.ok or _known_defect(o) for o in res["warm_ops"] + ops),
         "attempted": len(ops),
         "failed": failed,
         "metrics": {k: {"value": v, "unit": units[k]} for k, v in metrics.items()},

@@ -11,10 +11,26 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import threading
 import time
 from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
+
+
+COUNT_WAIT_S = 5.0
+
+
+def _stage_settled(st, job_status: str) -> bool:
+    """No task of the stage is running, and its counts are final: every
+    task finished, none ran (a skipped stage), or the job failed (the
+    stage's remaining tasks were killed)."""
+    if st is None:
+        return True
+    if st.numActiveTasks:
+        return False
+    done = st.numCompletedTasks + st.numFailedTasks
+    return done == 0 or done >= st.numTasks or job_status == "FAILED"
 
 
 @dataclass
@@ -87,19 +103,43 @@ class Tracer:
             self.overhead_s[sp.phase] += time.perf_counter() - sp.end
 
     def _count(self, sc, sp: Span) -> None:
+        """Jobs, stages and tasks the span launched. The status tracker
+        is fed asynchronously by the listener bus, so first wait (up to
+        COUNT_WAIT_S each) for the bus to drain and until every job of
+        the group has ended and no stage still has running tasks or an
+        unflushed task count."""
+        try:
+            # every job's end event is posted before its action returns,
+            # so once the bus is drained the tracker holds the whole span
+            sc._jsc.sc().listenerBus().waitUntilEmpty(int(COUNT_WAIT_S * 1000))
+        except Exception as e:  # internal API: fall back to polling alone
+            print(f"# listener bus wait failed: {type(e).__name__}", file=sys.stderr)
         tracker = sc.statusTracker()
-        for jid in tracker.getJobIdsForGroup(self._group(sp)):
-            info = tracker.getJobInfo(jid)
-            if info is None:
-                continue
-            sp.jobs += 1
-            for sid in info.stageIds:
-                st = tracker.getStageInfo(sid)
-                if st is None or st.numCompletedTasks + st.numFailedTasks == 0:
-                    continue  # skipped stage: its shuffle output was reused
-                sp.stages += 1
-                sp.tasks += st.numCompletedTasks
-                sp.failed_tasks += st.numFailedTasks
+        group = self._group(sp)
+        deadline = time.perf_counter() + COUNT_WAIT_S
+        while True:
+            jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+            jobs = [j for j in jobs if j is not None]
+            stages = {}  # a shuffle stage reused by a later job is listed by both
+            for job in jobs:
+                for sid in job.stageIds:
+                    stages[sid] = (tracker.getStageInfo(sid), job.status)
+            if all(j.status in ("SUCCEEDED", "FAILED") for j in jobs) and all(
+                _stage_settled(st, status) for st, status in stages.values()
+            ):
+                break
+            if time.perf_counter() >= deadline:
+                print(f"# span {sp.name}: Spark counts still moving after "
+                      f"{COUNT_WAIT_S}s, counted as they stand", file=sys.stderr)
+                break
+            time.sleep(0.005)
+        sp.jobs = len(jobs)
+        for st, _ in stages.values():
+            if st is None or st.numCompletedTasks + st.numFailedTasks == 0:
+                continue  # skipped after its job ended: shuffle output reused
+            sp.stages += 1
+            sp.tasks += st.numCompletedTasks
+            sp.failed_tasks += st.numFailedTasks
 
     def finish(self) -> None:
         """Compute each span's self time: its duration minus the part
